@@ -22,12 +22,48 @@ import shutil
 import time
 from pathlib import Path
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from tera_spark.coordination import PosixLinkArbiter, SlotArbiter
 from tera_spark.model import CELL_SCHEMA
 from tera_spark.registry import TableSchema, parse_schema_string
 from tera_spark.sources.tables import schema_codec, write_cell_table
+
+
+_NO_STATS = object()
+
+
+def _footer_max_seq(oplog: Path):
+    """Max `seq` over the op-log's parquet footers (None for an empty
+    log), or _NO_STATS when the footers cannot tell: a non-empty row
+    group without `seq` min/max statistics, or a layout other than
+    flat parquet files."""
+    import pyarrow.parquet as pq
+
+    if not oplog.is_dir():
+        return _NO_STATS
+    top = None
+    for f in oplog.iterdir():
+        if f.name.startswith((".", "_")):
+            continue  # hidden to Spark's reader too (.crc, _SUCCESS)
+        if f.is_dir() or f.suffix != ".parquet":
+            return _NO_STATS
+        md = pq.read_metadata(f)
+        if md.num_rows == 0:
+            continue
+        if "seq" not in md.schema.names:
+            return _NO_STATS
+        col = md.schema.names.index("seq")
+        for rg in range(md.num_row_groups):
+            g = md.row_group(rg)
+            if g.num_rows == 0:
+                continue
+            st = g.column(col).statistics
+            if st is None or not st.has_min_max:
+                return _NO_STATS
+            top = st.max if top is None else max(top, st.max)
+    return top
 
 
 class WriterFenced(Exception):
@@ -379,7 +415,7 @@ class Catalog:
     def append(
         self,
         name: str,
-        cells: DataFrame,
+        cells: DataFrame | pa.Table,
         *,
         commit_seq: int | None = None,
         op_kinds: list[int] | None = None,
@@ -388,9 +424,14 @@ class Catalog:
         """Group commit: parquet append, then an atomic commit record.
         The record (commits/<max_seq>.json, written via rename) is the
         visibility point — the WAL-append-returns moment of the
-        reference's TabletWriter. ``commit_seq`` is the batch's max
-        seq when the caller knows it (MutationBatch does); otherwise
-        one small aggregation computes it.
+        reference's TabletWriter. ``cells`` is a DataFrame (written by
+        a Spark job) or a pyarrow Table the driver already holds
+        (MutationBatch.to_arrow — written from the driver, no Spark
+        job, as tera's tablet server appends a write to its WAL).
+        ``commit_seq`` is the batch's max seq when the caller knows it
+        (MutationBatch does); otherwise it is computed from the rows —
+        by pyarrow.compute for a Table, one small aggregation for a
+        DataFrame.
 
         Crash recovery is the WAL discard-uncommitted-tail step: if
         raw data exists above the watermark at the next append (a
@@ -412,14 +453,20 @@ class Catalog:
         w0 = self.commit_watermark(name)
         self._staged_append(name, cells)
         if commit_seq is None:
-            import pyspark.sql.functions as _F
+            if isinstance(cells, pa.Table):
+                import pyarrow.compute as pc
 
-            top, kinds = cells.agg(
-                _F.max("seq"), _F.sort_array(_F.collect_set("op"))
-            ).collect()[0]
+                top = pc.max(cells["seq"]).as_py()
+                kinds = pc.unique(cells["op"]).to_pylist()
+            else:
+                import pyspark.sql.functions as _F
+
+                top, kinds = cells.agg(
+                    _F.max("seq"), _F.sort_array(_F.collect_set("op"))
+                ).collect()[0]
             commit_seq = int(top) if top is not None else None
             if op_kinds is None:
-                op_kinds = [int(k) for k in kinds]
+                op_kinds = sorted(int(k) for k in kinds)
         if commit_seq is not None:
             # keep the reservation counter above every committed window,
             # whoever allocated it (plain appends included)
@@ -457,7 +504,7 @@ class Catalog:
                         )
             self._record_commit(name, commit_seq, op_kinds, lo=commit_lo)
 
-    def _staged_append(self, name: str, cells: DataFrame) -> None:
+    def _staged_append(self, name: str, cells: DataFrame | pa.Table) -> None:
         """Append parquet files to the op-log via a PRIVATE staging dir
         + rename, instead of `mode("append")` straight into the log.
         Two concurrent committers (the CAS disjoint fast path runs
@@ -468,14 +515,29 @@ class Catalog:
         scripts/scale_smoke_cas.py). Staging is per-append-unique, and
         the per-file renames are atomic; a crash mid-move leaves a
         partial batch that the watermark/gap mask already treats as
-        torn, exactly like a crash mid-`mode("append")` did."""
+        torn, exactly like a crash mid-`mode("append")` did.
+
+        A pyarrow Table is written from the driver with pyarrow (snappy,
+        footer statistics — what Spark writes), one file per
+        ``contiguous_slices`` slice, so a bulk load keeps the file
+        layout a Spark write of it would have."""
         import uuid
 
         oplog = Path(self.oplog_path(name))
         oplog.mkdir(exist_ok=True)
         tag = uuid.uuid4().hex[:12]
         stage = self.root / name / f".stage-{tag}"
-        cells.write.parquet(str(stage))
+        if isinstance(cells, pa.Table):
+            import pyarrow.parquet as pq
+
+            from tera_spark.operators.mutation import contiguous_slices
+
+            stage.mkdir()
+            n = self.spark.sparkContext.defaultParallelism
+            for i, part in enumerate(contiguous_slices(cells, n)):
+                pq.write_table(part, stage / f"part-{i:05d}.snappy.parquet", compression="snappy")
+        else:
+            cells.write.parquet(str(stage))
         # keep the part- prefix: footer-routing, stats, replication and
         # compaction all discover op-log files via part-*.parquet (the
         # same convention compact_inplace's part-c<token> renames use)
@@ -683,9 +745,13 @@ class Catalog:
 
         if not self.get_schema(name).kv_mode:
             raise ValueError(f"not a kv-mode table: {name}")
+        from tera_spark.model import arrow_schema
+
         seq = time.time_ns()
-        row = [(key, value, expire, seq)]
-        self.append(name, self.spark.createDataFrame(row, KV_OPLOG_SCHEMA), commit_seq=seq)
+        row = {"key": [key], "value": [value], "expire_ts": [expire], "seq": [seq]}
+        self.append(
+            name, pa.table(row, schema=arrow_schema(KV_OPLOG_SCHEMA)), commit_seq=seq
+        )
 
     # --- snapshots / compaction --------------------------------------
     def snapshot(
@@ -809,10 +875,16 @@ class Catalog:
     def raw_max_seq(self, name: str) -> int | None:
         """Max write seq in the op-log INCLUDING rolled-back windows —
         seq allocation must stay above them, or new writes would land
-        inside an invalidated range and vanish."""
-        top = (
-            self.spark.read.parquet(self.oplog_path(name)).agg({"seq": "max"}).collect()[0][0]
-        )
+        inside an invalidated range and vanish. Read from the `seq`
+        maxima in the parquet footers (no Spark job); when a non-empty
+        row group lacks them, one small aggregation computes it."""
+        top = _footer_max_seq(Path(self.oplog_path(name)))
+        if top is _NO_STATS:
+            top = (
+                self.spark.read.parquet(self.oplog_path(name))
+                .agg({"seq": "max"})
+                .collect()[0][0]
+            )
         return int(top) if top is not None else None
 
     def delete_snapshot(self, name: str, snapshot_id: str) -> None:
@@ -940,9 +1012,7 @@ class Catalog:
         if not meta.exists():
             raise ValueError(f"no seq-pinned snapshot: {name}/{snapshot_id}")
         snap_seq = json.loads(meta.read_text())["seq"]
-        top = (
-            self.spark.read.parquet(self.oplog_path(name)).agg({"seq": "max"}).collect()[0][0]
-        )
+        top = self.raw_max_seq(name)
         if top is None or top <= snap_seq:
             return
         # through the locked read-modify-write: a concurrent recovery's
@@ -1399,7 +1469,7 @@ class Catalog:
         self._consume(name, "write")
         self._recover_tail(name)
         batch._base_seq = token["lo"]
-        self._staged_append(name, batch.to_df(self.spark, now_us=now_us))
+        self._staged_append(name, batch.to_arrow(now_us=now_us))
         token["op_kinds"] = [int(k) for k in batch.op_kinds]
         token["staged"] = True
 
@@ -1631,7 +1701,7 @@ class Catalog:
                         batch._base_seq = base
                         self.append(
                             name,
-                            batch.to_df(self.spark),
+                            batch.to_arrow(),
                             commit_seq=hi,
                             commit_lo=base,
                             op_kinds=batch.op_kinds,

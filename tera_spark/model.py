@@ -105,6 +105,19 @@ KV_OPLOG_SCHEMA = T.StructType(
     ]
 )
 
+
+def arrow_schema(schema: T.StructType):
+    """The pyarrow form of an op-log schema, for batches committed from
+    the driver (Catalog.append of a pyarrow Table): same names, types
+    and nullability, plus the footer key Spark's parquet writer stores,
+    so a driver-written file carries the exact Spark schema."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(schema).with_metadata(
+        {"org.apache.spark.sql.parquet.row.metadata": schema.json()}
+    )
+
+
 # Timestamps are int64 microseconds; kLatestTs = INT64_MAX
 # (reference: src/types.h:37-38).
 LATEST_TS = (1 << 63) - 1

@@ -162,7 +162,13 @@ def fold_row(
 
 class Seeker:
     """Point-read client over a catalog table. Caches footer metadata
-    per (file, mtime) — the SDK meta-cache analog."""
+    per (file, mtime) — the SDK meta-cache analog.
+
+    ``schema`` is a TableSchema, or a zero-argument callable returning
+    the table's current one (client.Table passes its stat-guarded
+    schema memo). With a catalog and no callable, every read re-reads
+    the registry entry, so a long-lived Seeker folds with the schema an
+    update_schema left, never the one it was built with."""
 
     def __init__(
         self,
@@ -174,14 +180,18 @@ class Seeker:
         cache_groups: int = 0,
         threads: int = 8,
     ):
+        if callable(schema):
+            self._schema_source = schema
+        elif catalog is not None:
+            self._schema_source = lambda: catalog.get_schema(table)
+        else:
+            self._schema_source = lambda: schema
         if catalog is not None:
-            self.schema = catalog.get_schema(table)
             self._root = Path(catalog.oplog_path(table))
             self._get_rollbacks = lambda: catalog._rollbacks(table)
             self._get_watermark = lambda: catalog.commit_watermark(table)
             self._get_gaps = lambda: catalog._masked_gaps(table)
         else:
-            self.schema = schema
             self._root = Path(path)
             self._get_rollbacks = lambda: []
             self._get_watermark = lambda: None
@@ -197,8 +207,13 @@ class Seeker:
     # --- routing ------------------------------------------------------
 
     @property
+    def schema(self) -> TableSchema | None:
+        return self._schema_source()
+
+    @property
     def _kv(self) -> bool:
-        return bool(self.schema is not None and self.schema.kv_mode)
+        schema = self.schema
+        return bool(schema is not None and schema.kv_mode)
 
     def _key_col(self) -> str:
         return "key" if self._kv else "row_key"
@@ -251,8 +266,9 @@ class Seeker:
         groups whose footer bounds admit them. Table-mode rows come
         back as 7-tuples; per-cell TTL (expire_ts column, present only
         in files written by TTL puts) is applied here."""
-        key_col = self._key_col()
-        columns = ["key", "value", "expire_ts", "seq"] if self._kv else _CELL_COLS
+        kv = self._kv
+        key_col = "key" if kv else "row_key"
+        columns = ["key", "value", "expire_ts", "seq"] if kv else _CELL_COLS
         rollbacks = self._get_rollbacks()
         watermark = self._get_watermark()
         gaps = self._get_gaps()
@@ -266,7 +282,7 @@ class Seeker:
                 return t
             pf = pq.ParquetFile(str(f))
             cols = columns
-            if not self._kv and "expire_ts" in pf.schema_arrow.names:
+            if not kv and "expire_ts" in pf.schema_arrow.names:
                 cols = columns + ["expire_ts"]
             t = pf.read_row_group(rg, columns=cols)
             if self._cache_groups > 0:
@@ -290,7 +306,7 @@ class Seeker:
             t = t.filter(pc.is_in(t[key_col], value_set=pa.array(set(rg_keys))))
             if t.num_rows == 0:
                 continue
-            has_ttl = not self._kv and "expire_ts" in t.column_names
+            has_ttl = not kv and "expire_ts" in t.column_names
             read_cols = columns + (["expire_ts"] if has_ttl else [])
             for row in zip(*(t[c].to_pylist() for c in read_cols)):
                 seq = row[len(columns) - 1]
@@ -345,7 +361,8 @@ class Seeker:
         (row_key, cf, qualifier, ts, value), newest-first per column —
         the iteration order of `RowReader::ToMap`
         (include/tera/reader.h:52-55)."""
-        if self._kv:
+        schema = self.schema
+        if schema is not None and schema.kv_mode:
             raise ValueError("use get_kv for KV-mode tables")
         if now_us is None:
             import time as _t
@@ -356,7 +373,7 @@ class Seeker:
         for k, rows in by_key.items():
             if snapshot_seq is not None:
                 rows = [r for r in rows if r[6] <= snapshot_seq]
-            cells = fold_row(rows, self.schema, now_us=now_us)
+            cells = fold_row(rows, schema, now_us=now_us)
             # scan-level semantics, mirroring scan.py steps 3-4:
             # version cap counts BEFORE projection/time-range post-filters
             if max_versions is not None:
@@ -400,13 +417,14 @@ class Seeker:
         operator for large ranges — this path is for interactive
         range reads (teracli scan ergonomics) where job latency
         dominates."""
-        if self._kv:
+        schema = self.schema
+        if schema is not None and schema.kv_mode:
             raise ValueError("scan_range serves table-mode; use kv view for KV scans")
         if now_us is None:
             import time as _t
 
             now_us = int(_t.time() * 1_000_000)
-        columns_arg = ["key", "value", "expire_ts", "seq"] if self._kv else _CELL_COLS
+        columns_arg = _CELL_COLS
         rollbacks = self._get_rollbacks()
         watermark = self._get_watermark()
         gaps = self._get_gaps()
@@ -449,7 +467,7 @@ class Seeker:
 
         out: list[tuple] = []
         for k in sorted(by_key):
-            cells = fold_row(by_key[k], self.schema, now_us=now_us)
+            cells = fold_row(by_key[k], schema, now_us=now_us)
             if max_versions is not None:
                 per_col: dict[tuple, int] = defaultdict(int)
                 kept = []

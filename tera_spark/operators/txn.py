@@ -256,10 +256,9 @@ class GlobalTransaction:
             holder = (self._cat.writer_id or self._cat._auto_writer_id) + "-plain"
             base, hi = self._cat._reserve_seq_window(table, len(batch), holder)
             batch._base_seq = base
-            df = batch.to_df(self._cat.spark, now_us=self._now_us)
             self._cat.append(
                 table,
-                df,
+                batch.to_arrow(now_us=self._now_us),
                 commit_seq=hi,
                 commit_lo=base,
                 op_kinds=batch.op_kinds,
